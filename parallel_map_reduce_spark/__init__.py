@@ -13,6 +13,9 @@ Layout
 - ``operators``  : the operator library (tokenize, inverted index,
                    dedup, similarity, text analysis, relational helpers).
 - ``functions``  : reusable Column-expression helpers.
+- ``kernels``    : shared core of the ``mapInArrow`` kernels (ASCII
+                   tokenizer, shingles, capped md5 memo, centroid
+                   scoring), pickled by value to the workers.
 - ``plans``      : end-to-end query pipelines (the flagship query).
 - ``streaming``  : Structured Streaming pipelines over the events table.
 - ``sinks``      : output writers (partitioned letter text sink).

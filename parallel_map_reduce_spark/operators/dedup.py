@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_i32
+from ..kernels import Md5Memo, ascii_words, md5_hex, md5_u32, shingle_set, word_shingles
 from ..registry import pin
 from .tokenize import clean_word_col, TOKEN_SPLIT_REGEX
 
@@ -141,23 +142,16 @@ def _sized_shingles_of_words(wa: DataFrame, k: int) -> DataFrame:
 def _sized_shingle_rows_fn(k: int):
     """Arrow-batch kernel factory producing the ASCII
     ``_sized_shingles_of_words`` rows — (doc_id, shingle, n) where n =
-    the document's DISTINCT-shingle count — in one Python hop
-    (r18 opt, guide §4.2): the JVM form paid an interpreted O(k)
-    slice + array_join per position plus array_distinct per document
-    (CodegenFallback HOFs). Tokenization is the exact strip-then-lower
-    replica ``_minhash_rows_fn`` documents; shingle strings are
-    byte-identical (' '-joined cleaned tokens), and row ORDER is
+    the document's DISTINCT-shingle count — in one Python hop: the JVM
+    form pays an interpreted O(k) slice + array_join per position plus
+    array_distinct per document (CodegenFallback HOFs). Row ORDER is
     irrelevant downstream (posting lists sort, aggregates are
     order-free). Docs with < k tokens emit nothing, matching the
     empty-array explode."""
 
     def rows_fn(it):
-        import re
-
         import pyarrow as pa
 
-        strip_re = re.compile(r"[^A-Za-z \t\n]")
-        split_re = re.compile(r"[ \t\n]+")
         for batch in it:
             if batch.num_rows == 0:
                 continue
@@ -167,24 +161,11 @@ def _sized_shingle_rows_fn(k: int):
             out_s: list[str] = []
             out_n: list[int] = []
             for doc_id, text in zip(ids, texts):
-                if not text:
-                    continue
-                words = [
-                    w
-                    for w in split_re.split(strip_re.sub("", text).lower())
-                    if w
-                ]
-                n_sh = len(words) - k + 1
-                if n_sh < 1:
-                    continue
-                distinct = set(
-                    " ".join(words[i : i + k]) for i in range(n_sh)
-                )
+                distinct = shingle_set(ascii_words(text), k)
                 n = len(distinct)
-                for s in distinct:
-                    out_d.append(doc_id)
-                    out_s.append(s)
-                    out_n.append(n)
+                out_d.extend([doc_id] * n)
+                out_s.extend(distinct)
+                out_n.extend([n] * n)
             if not out_d:
                 continue
             yield pa.record_batch(
@@ -258,47 +239,26 @@ def exact_dup_groups(docs: DataFrame) -> DataFrame:
 def _minhash_rows_fn():
     """Arrow-batch kernel factory for ``_minhash_wide``: per document,
     tokenize → distinct 3-token shingles → md5-derived 32-bit shingle
-    hash → the 16 affine mins, all inside one Python hop (guide §4.2 —
-    hand whole batches to native code instead of five JVM stages and a
-    doc_id exchange). Exactness, piece by piece:
-
-    - tokenize: Spark splits on ``[ \\t\\n]+`` THEN strips
-      ``[^A-Za-z]`` per token and lowercases. Stripping
-      ``[^A-Za-z \\t\\n]`` from the whole text first is equivalent
-      (removal never touches a separator, so token boundaries are
-      unchanged), and lowercasing AFTER the strip only ever sees ASCII
-      — replicating Spark's strip-then-lower order exactly (lowering
-      first would let Unicode case-folding mint ASCII letters, e.g.
-      İ → i̇, that the engine's order deletes).
-    - shingle hash: ``int(md5(utf8)[:8], 16)`` == conv(substring(
-      md5, 1, 8), 16, 10) — integer-exact; memoized per task (shingles
-      repeat across documents; the JVM expression re-hashes every row).
-    - mins: seeds < 10^6 and hv < 2^32, so a*hv+b < 2^52 — exact in
-      int64, no overflow, both operands positive so ``%`` agrees
-      between numpy and the JVM.
-    - docs whose cleaned text yields no shingle (< k words or NULL)
-      produce NO output row, matching the groupBy-over-zero-rows
-      absence of the aggregate form.
-
-    numpy/pyarrow/re imports live in the closure so executors resolve
-    them at first call; the md5 memo is per task (guide §4.5)."""
+    hash → the 16 affine mins, all inside one Python hop instead of five
+    JVM stages and a doc_id exchange. The shingle hash is memoized per
+    task (shingles repeat across documents). The mins are exact: seeds
+    < 10^6 and hv < 2^32, so a*hv+b < 2^52 — no int64 overflow, and
+    both operands are positive so ``%`` agrees between numpy and the
+    JVM. Docs whose cleaned text yields no shingle (< k words or NULL)
+    produce NO output row, matching the groupBy-over-zero-rows absence
+    of the aggregate form."""
     k = SHINGLE_K
     seeds_a = [a for a, _ in MINHASH_SEEDS]
     seeds_b = [b for _, b in MINHASH_SEEDS]
     prime = MINHASH_PRIME
 
     def rows_fn(it):
-        import hashlib
-        import re
-
         import numpy as np
         import pyarrow as pa
 
-        strip_re = re.compile(r"[^A-Za-z \t\n]")
-        split_re = re.compile(r"[ \t\n]+")
         a_col = np.array(seeds_a, dtype=np.int64)[:, None]
         b_col = np.array(seeds_b, dtype=np.int64)[:, None]
-        memo: dict[str, int] = {}
+        memo = Md5Memo(md5_u32)
         for batch in it:
             if batch.num_rows == 0:
                 continue
@@ -307,28 +267,10 @@ def _minhash_rows_fn():
             out_ids: list[int] = []
             out_mins: list[np.ndarray] = []
             for doc_id, text in zip(doc_ids, texts):
-                if not text:
+                distinct = shingle_set(ascii_words(text), k)
+                if not distinct:
                     continue
-                words = [
-                    w
-                    for w in split_re.split(strip_re.sub("", text).lower())
-                    if w
-                ]
-                if len(words) < k:
-                    continue
-                shingles = {
-                    " ".join(words[i : i + k])
-                    for i in range(len(words) - k + 1)
-                }
-                hv = np.empty(len(shingles), dtype=np.int64)
-                for i, s in enumerate(shingles):
-                    h = memo.get(s)
-                    if h is None:
-                        h = int(
-                            hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16
-                        )
-                        memo[s] = h
-                    hv[i] = h
+                hv = np.array(memo(distinct), dtype=np.int64)
                 out_ids.append(doc_id)
                 out_mins.append(((a_col * hv[None, :] + b_col) % prime).min(axis=1))
             if not out_ids:
@@ -345,16 +287,11 @@ def _minhash_rows_fn():
 
 def _minhash_wide(docs: DataFrame) -> DataFrame:
     """(doc_id, m0..m{N-1}): the full minhash signature as ONE wide row
-    per document. r18 opt (guide §4.2 + §2.4): one Arrow hop computes
-    tokenize → distinct shingles → shingle md5 → 16 affine mins per
-    document, replacing the explode(shingles) → JVM md5 → 16-parallel-
-    aggregate → doc_id Exchange pipeline (r12's shape). Values are
-    bit-identical by construction (integer-exact md5/affine math,
-    token semantics replicated strip-then-lower — see
-    ``_minhash_rows_fn``), and the doc_id exchange is GONE: signatures
-    are a per-document function, so they now derive at scan speed with
-    zero shuffles (at 100 TB this removes a corpus-wide shuffle from
-    every minhash consumer). Only (doc_id, text) crosses the Python
+    per document. One Arrow hop computes tokenize → distinct shingles →
+    shingle md5 → 16 affine mins per document (``_minhash_rows_fn``;
+    values bit-identical to the JVM expressions, see ``kernels``).
+    Signatures are a per-document function, so they derive at scan
+    speed with zero shuffles. Only (doc_id, text) crosses the Python
     boundary."""
     return docs.select("doc_id", "text").mapInArrow(
         _minhash_rows_fn(),
@@ -574,18 +511,15 @@ def ngram_jaccard_pairs(
             "capped posting-list path — pass df_cap (and not shingles) "
             "with it, or pass the row-form shingles override instead"
         )
-    # Capped path (r17 opt): the per-doc set size n rides the exploded
-    # shingle rows (guide §2.3 — a few metadata bytes through the one
-    # existing shuffle), so the old separate sizes aggregation — a
-    # SECOND full scan + tokenize of the corpus — and the two size
-    # joins at the tail disappear. Plan: 4 Exchanges + 2 joins → 2
-    # Exchanges + 0 joins; values identical (n is the same distinct
-    # count either way, jaccard arithmetic unchanged).
+    # Capped path: the per-doc set size n rides the exploded shingle
+    # rows (a few metadata bytes through the one existing shuffle), so
+    # no separate sizes aggregation — a SECOND full scan + tokenize of
+    # the corpus — and no size joins at the tail are needed: 2
+    # Exchanges + 0 joins.
     if df_cap is not None and shingles is None:
         # Default ASCII source: the Arrow kernel (one Python hop at
         # scan speed — see _sized_shingle_rows_fn) instead of the
-        # interpreted HOF pipeline; ~35% of the query's warm wall was
-        # the shingle projection. Explicit sized_shingles overrides
+        # interpreted HOF pipeline. Explicit sized_shingles overrides
         # (the unicode tokenizer) keep their JVM form.
         sh = (
             sized_shingles
@@ -1362,34 +1296,17 @@ SUBSTR_MIN_OCC = 2  # a window is "repeated" if it occurs >= this many
 
 def _gram_rows_fn(L: int):
     """Arrow-batch kernel factory for ``repeated_substring_spans``'s
-    positional L-token gram hashes: per document, tokenize (the exact
-    strip-then-lower replica ``_minhash_rows_fn`` documents) and emit
-    one (doc_id, pos, md5-hex) row per window start. Each DISTINCT
-    gram string is hashed once per task (boilerplate grams repeat
-    across documents — the JVM expression re-hashed every position);
-    hv is the same full md5 hex the DuckDB oracle computes, so
-    collision behavior is engine-identical. Rows with fewer than L
-    tokens emit nothing, matching the n_gram >= 1 filter."""
+    positional L-token gram hashes: per document, one (doc_id, pos,
+    md5-hex) row per window start. Each DISTINCT gram string is hashed
+    once per task (boilerplate grams repeat across documents); hv is the
+    same full md5 hex the DuckDB oracle computes, so collision behavior
+    is engine-identical. Rows with fewer than L tokens emit nothing,
+    matching the n_gram >= 1 filter."""
 
     def rows_fn(it):
-        import hashlib
-        import re
-
         import pyarrow as pa
 
-        strip_re = re.compile(r"[^A-Za-z \t\n]")
-        split_re = re.compile(r"[ \t\n]+")
-        memo: dict[str, str] = {}
-        memo_cap = 4_000_000
-
-        def gram_hash(g: str) -> str:
-            h = memo.get(g)
-            if h is None:
-                h = hashlib.md5(g.encode("utf-8")).hexdigest()
-                if len(memo) < memo_cap:
-                    memo[g] = h
-            return h
-
+        memo = Md5Memo(md5_hex)
         for batch in it:
             if batch.num_rows == 0:
                 continue
@@ -1399,20 +1316,10 @@ def _gram_rows_fn(L: int):
             out_p: list[int] = []
             out_h: list[str] = []
             for doc_id, text in zip(ids, texts):
-                if not text:
-                    continue
-                words = [
-                    w
-                    for w in split_re.split(strip_re.sub("", text).lower())
-                    if w
-                ]
-                n_gram = len(words) - L + 1
-                if n_gram < 1:
-                    continue
-                for i in range(n_gram):
-                    out_d.append(doc_id)
-                    out_p.append(i + 1)
-                    out_h.append(gram_hash(" ".join(words[i : i + L])))
+                hv = memo(word_shingles(ascii_words(text), L))
+                out_d.extend([doc_id] * len(hv))
+                out_p.extend(range(1, len(hv) + 1))
+                out_h.extend(hv)
             if not out_d:
                 continue
             yield pa.record_batch(
@@ -1464,14 +1371,12 @@ def repeated_substring_spans(
     contract)."""
     from pyspark.sql import Window
 
-    # Positional gram hashes in ONE Arrow hop (r18 opt, guide §4.2 —
-    # the winnowing-kernel pattern): the JVM transform paid an
+    # Positional gram hashes in ONE Arrow hop: the JVM transform pays an
     # interpreted O(L) slice + array_join + md5 per position
-    # (CodegenFallback), re-hashing repeated boilerplate grams at
-    # every occurrence; the kernel tokenizes with two C-regex passes
-    # (the exact strip-then-lower replica) and hashes each DISTINCT
-    # gram once per task. Only (doc_id, text) crosses the boundary,
-    # and the exploded rows still carry only (pos, hash).
+    # (CodegenFallback), re-hashing repeated boilerplate grams at every
+    # occurrence; the kernel hashes each DISTINCT gram once per task.
+    # Only (doc_id, text) crosses the boundary, and the exploded rows
+    # carry only (pos, hash).
     grams = docs.select("doc_id", "text").mapInArrow(
         _gram_rows_fn(L), "doc_id bigint, pos int, hv string"
     )

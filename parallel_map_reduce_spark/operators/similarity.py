@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_i32
+from ..kernels import centroid_arrays, nearest_centroid
 from ..sources.catalog import read_parquet
 from ..functions.vector import cosine_similarity, dot, l2_norm
 
@@ -303,34 +304,18 @@ def _centroid_df(spark, cents: dict[int, list[float]]) -> DataFrame:
 
 def _assign_fn(cent_rows):
     """Arrow-batch kernel factory for ``_assign_to_centroids``: nearest
-    centroid by cosine, numpy accumulation one dimension at a time (the
-    ``dot`` fold's left-to-right order — bit-identical doubles), argmax
-    over cid-ascending columns (np.argmax takes the FIRST max, which is
-    exactly max_by's (c_cos, -centroid_id) tie-break; a NaN column from
-    a zero-norm row/centroid is 'greatest' under both orders and both
-    resolve to the lowest such cid). Embedding/nrm columns pass through
-    the batch untouched."""
+    centroid by cosine (``kernels.nearest_centroid``, bit-identical to
+    the crossJoin form). Embedding/nrm columns pass through the batch
+    untouched."""
 
     def assign(it):
-        import numpy as np
         import pyarrow as pa
 
-        cids = np.array([c[0] for c in cent_rows], dtype=np.int32)
-        cmat = np.array([c[1] for c in cent_rows], dtype=np.float64)
-        cnrm = np.array([c[2] for c in cent_rows], dtype=np.float64)
+        cids, cmat, cnrm = centroid_arrays(cent_rows)
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            embs = np.stack(
-                batch.column("embedding").to_numpy(zero_copy_only=False)
-            ).astype(np.float64)
-            nrm = batch.column("nrm").to_numpy()
-            n, dim = embs.shape
-            acc = np.zeros((n, len(cids)))
-            for i in range(dim):  # sequential: matches the fold
-                acc = acc + embs[:, i : i + 1] * cmat[:, i]
-            cos = acc / (nrm[:, None] * cnrm[None, :])
-            best = np.argmax(cos, axis=1)
+            _, best = nearest_centroid(batch, cmat, cnrm)
             yield pa.record_batch(
                 [
                     batch.column("vec_id"),
@@ -346,11 +331,10 @@ def _assign_fn(cent_rows):
 
 def _train_partials_fn(cent_rows):
     """Arrow-batch kernel factory for the Lloyd update: nearest-centroid
-    scoring identical to ``_assign_fn`` (same per-dimension sequential
-    accumulation, same first-max argmax/NaN tie behavior), then
-    per-cluster partial sums and counts accumulated with ``np.add.at``
-    (unbuffered: applies additions sequentially in row order — the
-    order an avg partial sum visits the partition). Emits one
+    scoring as in ``_assign_fn``, then per-cluster partial sums and
+    counts accumulated with ``np.add.at`` (unbuffered: applies additions
+    sequentially in row order — the order an avg partial sum visits the
+    partition). Emits one
     (centroid_id, pos, s, c) row per non-empty cluster x dimension per
     task — k x dim metadata rows instead of n x dim exploded rows."""
 
@@ -358,25 +342,14 @@ def _train_partials_fn(cent_rows):
         import numpy as np
         import pyarrow as pa
 
-        cids = np.array([c[0] for c in cent_rows], dtype=np.int32)
-        cmat = np.array([c[1] for c in cent_rows], dtype=np.float64)
-        cnrm = np.array([c[2] for c in cent_rows], dtype=np.float64)
+        cids, cmat, cnrm = centroid_arrays(cent_rows)
         k, dim = cmat.shape
         sums = np.zeros((k, dim))
         cnts = np.zeros(k, dtype=np.int64)
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            embs = np.stack(
-                batch.column("embedding").to_numpy(zero_copy_only=False)
-            ).astype(np.float64)
-            nrm = batch.column("nrm").to_numpy()
-            n, _ = embs.shape
-            acc = np.zeros((n, k))
-            for i in range(dim):  # sequential: matches the fold
-                acc = acc + embs[:, i : i + 1] * cmat[:, i]
-            cos = acc / (nrm[:, None] * cnrm[None, :])
-            best = np.argmax(cos, axis=1)
+            embs, best = nearest_centroid(batch, cmat, cnrm)
             np.add.at(sums, best, embs)
             np.add.at(cnts, best, 1)
         nz = np.nonzero(cnts)[0]
@@ -401,11 +374,10 @@ def _assign_to_centroids(e: DataFrame, cents: DataFrame) -> DataFrame:
     When the centroid values ride the frame (every ``_centroid_df``
     product — the Lloyd loop, the pretrained-sidecar memo, SemDeDup),
     assignment is ONE Arrow hop per partition: zero shuffle, no k-fold
-    interpreted cosine per vector (r18 opt, guide §4.2 — the crossJoin
-    form exploded every vector into k rows, paid k CodegenFallback
-    dot folds, and re-collapsed them through a vec_id Exchange that
-    moved the full embedding arrays). Values bit-identical — see
-    ``_assign_fn``.
+    interpreted cosine per vector (the crossJoin form explodes every
+    vector into k rows, pays k CodegenFallback dot folds, and
+    re-collapses them through a vec_id Exchange that moves the full
+    embedding arrays). Values bit-identical — see ``_assign_fn``.
 
     Fallback (a centroid frame NOT built by ``_centroid_df``):
     broadcast cross-join over k centroid rows + per-vector max_by — one

@@ -14,6 +14,7 @@ from ..operators.tokenize import doc_word_pairs, filter_empty, normalize_tokens,
 from ..plans.flagship import flagship_inverted_index
 from ..registry import register
 from ..sources.catalog import load_table
+from ..sources.scaled_corpus import REF_CORPUS_PARQUET
 from ..sources.text_manifest import read_manifest_documents
 from ._sql import WORDS_CTE
 
@@ -158,18 +159,18 @@ def manifest_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _REF_MANIFEST = "/root/reference/checker/test.txt"
-# Landed by tools/land_reference_corpus.py (committed): (doc_id, text)
-# with 1-based MANIFEST-order ids — filename sort would misnumber
-# (chapter_10 < chapter_2 lexicographically), so the landing script
-# walks the manifest in Python, independent of the Spark source.
-_REF_CORPUS_PARQUET = "/root/repo/refdata/reference_corpus.parquet"
+# The entries below read REF_CORPUS_PARQUET, landed by
+# tools/land_reference_corpus.py (committed): (doc_id, text) with 1-based
+# MANIFEST-order ids — filename sort would misnumber (chapter_10 <
+# chapter_2 lexicographically), so the landing script walks the manifest
+# in Python, independent of the Spark source.
 
 
 @register(
     "reference_corpus_index",
     oracle=f"""
 WITH docs AS (
-    SELECT doc_id, text FROM read_parquet('{_REF_CORPUS_PARQUET}')
+    SELECT doc_id, text FROM read_parquet('{REF_CORPUS_PARQUET}')
 ),
 tok AS (
     SELECT doc_id, unnest(string_split_regex(text, '[ \t\n]+')) AS tok FROM docs
@@ -303,7 +304,7 @@ def documents_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_line_repetition",
     oracle=f"""
 WITH docs AS (
-    SELECT doc_id, text FROM read_parquet('{_REF_CORPUS_PARQUET}')
+    SELECT doc_id, text FROM read_parquet('{REF_CORPUS_PARQUET}')
 ),
 arrs AS (
     SELECT doc_id,

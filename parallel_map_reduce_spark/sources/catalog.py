@@ -28,6 +28,11 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Directory holding the ``parallel_map_reduce_spark`` package.
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
+
 # (abspath, mtime_ns, size) -> inferred StructType. Parquet schema
 # inference runs a one-task footer-read JOB per spark.read.parquet();
 # under the registry's plan-only build contract (registry.py) a query
@@ -105,9 +110,18 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     - nanosAsLong: events.parquet stores TIMESTAMP(NANOS), which the
       vectorized reader rejects; read as BIGINT nanos instead.
     - UTC session TZ: the epoch-us oracle columns assume wall-clock UTC.
+
+    Python workers get the package's parent directory on their
+    PYTHONPATH: a worker's ``sys.path[0]`` is the JVM's working
+    directory, and module-level map bodies are pickled by reference, so
+    without it those kernels fail to import outside the repo directory.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    env = spark.sparkContext.environment
+    paths = env.get("PYTHONPATH", "")
+    if _PACKAGE_PARENT not in paths.split(os.pathsep):
+        env["PYTHONPATH"] = os.pathsep.join(p for p in (_PACKAGE_PARENT, paths) if p)
     # AQE is the engine's standing execution posture (runtime re-plan,
     # small-shuffle coalescing, skew-join splitting). A harness-built
     # bare session (no explicit confs anywhere) should get that posture,

@@ -173,13 +173,32 @@ EAGER_BUILD_OK = {
 
 
 @pytest.fixture(scope="module")
-def frames(spark, sf_dir):
-    out = {}
+def built(spark, sf_dir):
+    """(frames, errors): every batch entry's built frame, and the
+    exception of each entry whose build raised, by name. One broken
+    entry fails ``test_every_entry_builds`` only; the other lint tests
+    run over every entry that did build."""
+    frames, errors = {}, {}
     for name, spec in all_queries().items():
         if name.startswith(SKIP_PREFIX):
             continue
-        out[name] = spec.build(spark, sf_dir)
-    return out
+        try:
+            frames[name] = spec.build(spark, sf_dir)
+        except Exception as exc:  # noqa: BLE001
+            errors[name] = f"{type(exc).__name__}: {exc}"
+    return frames, errors
+
+
+@pytest.fixture(scope="module")
+def frames(built):
+    return built[0]
+
+
+def test_every_entry_builds(built):
+    errors = built[1]
+    assert not errors, "entries that did not build:\n" + "\n".join(
+        f"  {name}: {err[:300]}" for name, err in sorted(errors.items())
+    )
 
 
 def test_build_launches_no_jobs(spark, sf_dir, frames):
@@ -196,7 +215,7 @@ def test_build_launches_no_jobs(spark, sf_dir, frames):
     release_pins()
     offenders = {}
     for name, spec in all_queries().items():
-        if name.startswith(SKIP_PREFIX) or name in EAGER_BUILD_OK:
+        if name not in frames or name in EAGER_BUILD_OK:
             continue
         group = f"lint-lazy-{name}"
         sc.setJobGroup(group, name)
